@@ -14,7 +14,8 @@ import graft.spark.Pipeline
   * Behavior: resumable — urls already present in outputDir/extracted are
   * dropped with a left-anti join before the kernel runs, so re-running
   * after a failure is idempotent. Per-partition lineage rows are appended
-  * to the metrics table; driver-visible totals go through observe().
+  * to the metrics table; the job prints the totals that observe()
+  * collects on the `extracted` write as one JSON line.
   * On a real cluster this main is submitted unchanged (the session builder
   * only sets master when none is provided).
   */
@@ -47,26 +48,19 @@ object ExtractJob {
         Pipeline.resumeRemaining(input, spark.read.parquet(extractedPath))
       else input
 
-    val extracted = Pipeline.extractMode(spark, remaining, mode)
-      .toDF()
-      .observe("extract_totals",
-        count(lit(1)).as("docs"),
-        sum(when(col("ok"), 1L).otherwise(0L)).as("ok_docs"),
-        sum(col("chars").cast("long")).as("chars"))
-      .cache()
+    // the totals ride the `extracted` write: observed above the cache, so
+    // the later reads of the cached rows run no further counting job
+    val (observed, totals) = Pipeline.observeExtraction(Pipeline.extractMode(spark, remaining, mode))
+    val extracted = observed.cache()
 
     extracted.write.mode(SaveMode.Append).parquet(extractedPath)
-    Pipeline.partitionMetrics(spark, extracted.as[Pipeline.ExtractedDoc](
-      org.apache.spark.sql.Encoders.product[Pipeline.ExtractedDoc]))
+    Pipeline.partitionMetrics(spark, extracted)
       .toDF()
       .withColumn("run_ts", current_timestamp())
       .write.mode(SaveMode.Append).parquet(metricsPath)
 
-    val summary = extracted.agg(
-      count(lit(1)).as("docs"),
-      coalesce(sum(when(col("ok"), 1L).otherwise(0L)), lit(0L)).as("ok"),
-      coalesce(sum(when(col("ok"), 0L).otherwise(1L)), lit(0L)).as("errors")).collect()(0)
-    println(s"""{"job":"extract","mode":"$mode","docs":${summary.getLong(0)},"ok":${summary.getLong(1)},"errors":${summary.getLong(2)}}""")
+    val t = totals.get
+    println(s"""{"job":"extract","mode":"$mode","docs":${t("docs")},"ok":${t("ok_docs")},"errors":${t("decode_failures")}}""")
     spark.stop()
   }
 

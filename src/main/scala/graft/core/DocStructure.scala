@@ -371,6 +371,9 @@ object DocStructure {
       fontCache.getOrElseUpdate(n,
         Fonts.fontInfoFromDict(this, findDictByRef(n).getOrElse(emptyDict)))
 
+    /** The page tree walked once per document (see `DocStructure.pageRefs`). */
+    lazy val pageRefs: Either[PdfError, List[Int]] = rootRef.map(pageRefsFromRoot(_, this))
+
     def rootRef: Either[PdfError, Int] = trailer.get("/Root") match {
       case Some(PRef(r)) => Right(r)
       case _ => Left(PdfError.MissingKey("/Root", "trailer"))
@@ -591,6 +594,5 @@ object DocStructure {
     }
   }
 
-  def pageRefs(doc: Document): Either[PdfError, List[Int]] =
-    doc.rootRef.map(pageRefsFromRoot(_, doc))
+  def pageRefs(doc: Document): Either[PdfError, List[Int]] = doc.pageRefs
 }

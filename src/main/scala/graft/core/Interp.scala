@@ -48,6 +48,8 @@ object Interp {
     var operands: List[PObj] = Nil
     var mcStack: List[MCEntry] = Nil
     val nbuf = new Array[Double](6) // reusable numeric-operand buffer
+    // Tf fonts resolved once per resource dict and name (forms swap `res`)
+    val fonts = new java.util.IdentityHashMap[Dict, java.util.HashMap[String, Option[FontInfo]]]
   }
 
   /** Interpret a page's content (by page object ref). */
@@ -220,19 +222,29 @@ object Interp {
   private def readName(cur: Cursor): AnyRef = {
     val start = cur.pos
     cur.pos += 1
-    val sb = new StringBuilder("/")
-    while (!cur.atEnd && !isWs(cur.peek) && !isDelim(cur.peek)) {
-      sb.append(cur.peek.toChar); cur.pos += 1
-    }
-    if (cur.pos - start > 1) PName(sb.toString)
+    while (!cur.atEnd && !isWs(cur.peek) && !isDelim(cur.peek)) cur.pos += 1
+    if (cur.pos - start > 1) PName(latin1(cur.buf, start, cur.pos))
     else { cur.pos = start; null }
   }
+
+  /** buf[from, until) with each byte b as char b. */
+  private def latin1(buf: Array[Byte], from: Int, until: Int): String =
+    new String(buf, from, until - from, java.nio.charset.StandardCharsets.ISO_8859_1)
 
   /** Literal string in content streams (Interpret.hs:985-1012): octal up to
     * 3 digits (extra octal digits dropped), unknown escape -> '?'. */
   private def readLiteral(cur: Cursor): AnyRef = {
     cur.pos += 1
-    val sb = new StringBuilder
+    // a run with no escape or nested paren is the bytes as Latin-1 chars
+    // (byte b -> char b): copy it in one go
+    val buf = cur.buf
+    val start = cur.pos
+    var i = start
+    while (i < buf.length && buf(i) != ')' && buf(i) != '\\' && buf(i) != '(') i += 1
+    val run = latin1(buf, start, i)
+    if (i < buf.length && buf(i) == ')') { cur.pos = i + 1; return PText(run) }
+    cur.pos = i
+    val sb = new StringBuilder(run)
     var depth = 1
     while (true) {
       if (cur.atEnd) return null
@@ -312,28 +324,29 @@ object Interp {
   }
 
   /** Known operator names interned so hot streams don't allocate a string
-    * per operator token. */
-  private val knownOps: java.util.HashMap[String, String] = {
-    val m = new java.util.HashMap[String, String]
+    * per operator token, keyed by their bytes packed into a Long (an
+    * operator has at most 5 bytes and none is 0, so the key is unique). */
+  private val knownOps: scala.collection.mutable.LongMap[String] = {
+    val m = scala.collection.mutable.LongMap.empty[String]
     for (op <- List("q", "Q", "cm", "BT", "ET", "Tf", "Tc", "Tw", "Tz", "TL", "Ts",
       "Tr", "Td", "TD", "Tm", "T*", "Tj", "TJ", "Do", "m", "l", "c", "v", "y",
       "re", "h", "n", "S", "s", "f", "F", "f*", "B", "B*", "b", "b*", "W", "W*",
       "BDC", "BMC", "EMC", "BI", "ID", "EI", "gs", "cs", "CS", "rg", "RG", "g",
       "G", "k", "K", "d", "i", "j", "J", "M", "ri", "sh", "w", "SC", "SCN",
       "sc", "scn", "d0", "d1", "MP", "DP", "BX", "EX", "true", "false", "null"))
-      m.put(op, op)
+      m(op.foldLeft(0L)((k, c) => (k << 8) | c)) = op
     m
   }
 
   private def readOperator(cur: Cursor): AnyRef = {
     val start = cur.pos
-    val sb = new StringBuilder
-    while (!cur.atEnd && isOpChar(cur.peek)) { sb.append(cur.peek.toChar); cur.pos += 1 }
-    if (sb.isEmpty) { cur.pos = start; null }
+    var key = 0L
+    while (!cur.atEnd && isOpChar(cur.peek)) { key = (key << 8) | cur.peek; cur.pos += 1 }
+    val len = cur.pos - start
+    if (len == 0) null
     else {
-      val raw = sb.toString
-      val interned = knownOps.get(raw)
-      if (interned != null) interned else raw
+      val interned = if (len <= 5) knownOps.getOrNull(key) else null
+      if (interned != null) interned else latin1(cur.buf, start, cur.pos)
     }
   }
 
@@ -541,8 +554,11 @@ object Interp {
     st.operands = Nil
   }
 
-  private def currentMCID(st: IState): Option[Int] =
-    st.mcStack.collectFirst { case MCEntry(_, Some(n)) => n }
+  private def currentMCID(st: IState): Option[Int] = {
+    var s = st.mcStack
+    while (s.nonEmpty && s.head.mcid.isEmpty) s = s.tail
+    if (s.isEmpty) None else s.head.mcid
+  }
 
   private def mcidFromProps(props: PObj, res: Dict, doc: Document): Option[Int] = {
     val dict: Option[Dict] = props match {
@@ -568,8 +584,9 @@ object Interp {
   // ---------- text ----------
 
   private def resolveFont(fontName: String, size: Double, st: IState): Unit = {
-    val fi = st.fontOverrides.get(fontName).orElse(
-      lookupFontResource(st.doc, st.res, fontName))
+    val byName = st.fonts.computeIfAbsent(st.res, _ => new java.util.HashMap)
+    val fi = byName.computeIfAbsent(fontName, name =>
+      st.fontOverrides.get(name).orElse(lookupFontResource(st.doc, st.res, name)))
     st.gs.fontRes = Some(fontName)
     st.gs.font = fi
     st.gs.fontSize = size
@@ -664,7 +681,7 @@ object Interp {
         var k = 0
         while (k < codes.length) {
           val code = codes(k)
-          text.append(codeToUnicode(fi, code))
+          text.append(fi.unicode(code))
           var tx = 0.0
           var ty = 0.0
           if (wmodeV) {

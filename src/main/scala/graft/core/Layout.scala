@@ -1,6 +1,6 @@
 package graft.core
 
-import Util.{firstChar, lastChar, medianOf, strip, stripEnd, stripStart}
+import Util.{firstChar, lastChar, medianOf, strip, stripEnd}
 import PageItem._
 
 /** Line and paragraph reconstruction from interpreted page items.
@@ -215,10 +215,24 @@ object Layout {
   }
 
   def pageExtents(glyphs: List[Glyph]): (Double, Double) = {
-    val xs = glyphs.flatMap(g => List(g.x, g.x + g.width))
-    val ys = glyphs.map(_.y)
-    (math.max(1, xs.max - xs.min), math.max(1, ys.max - ys.min))
+    var x0, x1 = glyphs.head.x
+    var y0, y1 = glyphs.head.y
+    for (g <- glyphs) {
+      val xe = g.x + g.width
+      x0 = lesser(lesser(x0, g.x), xe)
+      x1 = greater(greater(x1, g.x), xe)
+      y0 = lesser(y0, g.y)
+      y1 = greater(y1, g.y)
+    }
+    (math.max(1, x1 - x0), math.max(1, y1 - y0))
   }
+
+  // List.min/max's choice between two doubles (a total order: NaN above
+  // every number, -0.0 below 0.0), without boxing each element
+  @inline private def lesser(a: Double, b: Double): Double =
+    if (java.lang.Double.compare(a, b) > 0) b else a
+  @inline private def greater(a: Double, b: Double): Double =
+    if (java.lang.Double.compare(a, b) < 0) b else a
 
   def baselineOf(wmode: Int, g: Glyph): Double = if (wmode == 1) g.x else g.y
   def inlineStartOf(wmode: Int, g: Glyph): Double = if (wmode == 1) g.y else g.x
@@ -406,28 +420,25 @@ object Layout {
     val repTop = repeatedCores(countBandCores(Top))
     val repBottom = repeatedCores(countBandCores(Bottom))
 
+    // laziness hazard: the reference never forces a Middle line's normalized text
     def isRemoved(extent: (Double, Double), l: Line): Boolean = {
       val band = lineBand(extent, l)
-      val norm = normalizeHeaderFooterText(l.text)
-      shouldRemove(band, norm, pageCount, repTop, repBottom)
+      band != Middle &&
+        shouldRemove(band, normalizeHeaderFooterText(l.text), pageCount, repTop, repBottom)
     }
 
     pagesLines.map { ls =>
       if (ls.isEmpty) ls
       else {
         val extent = pageBaselineExtent(ls)
-        val flags = ls.map(isRemoved(extent, _))
-        if (ls.length <= 2) {
-          if (flags.contains(true)) ls.zip(flags).collect { case (l, false) => l } else ls
-        } else ls.zip(flags).collect { case (l, false) => l }
+        ls.filterNot(isRemoved(extent, _))
       }
     }
   }
 
   private def shouldRemove(band: Band, norm: String, pageCount: Int,
       repTop: Set[String], repBottom: Set[String]): Boolean = {
-    if (band == Middle) false
-    else if (isBarePageNumber(norm)) pageCount >= 2
+    if (isBarePageNumber(norm)) pageCount >= 2
     else {
       val core = norm.filter(_ != '#')
       val repeated = band match {
@@ -452,8 +463,9 @@ object Layout {
   }
 
   def pageBaselineExtent(ls: List[Line]): (Double, Double) = {
-    val baselines = ls.map(_.baseline)
-    (baselines.min, baselines.max)
+    var lo, hi = ls.head.baseline
+    for (l <- ls.tail) { lo = lesser(lo, l.baseline); hi = greater(hi, l.baseline) }
+    (lo, hi)
   }
 
   def normalizeHeaderFooterText(t: String): String =
@@ -601,16 +613,26 @@ object Layout {
       case _ => false
     }
 
+  /** "a." or up to two digits then ".", spaces allowed around the marker. */
   def listMarkerStart(l: Line): Boolean = {
-    val t = stripStart(l.text)
-    def lettered: Boolean = t.headOption.exists(c => c >= 'a' && c <= 'z') &&
-      stripStart(t.drop(1)).headOption.contains('.')
-    def numbered: Boolean = t.headOption.exists(_.isDigit) && {
-      val ds = t.takeWhile(_.isDigit)
-      ds.nonEmpty && ds.length <= 2 &&
-        stripStart(t.drop(ds.length)).headOption.contains('.')
+    val t = l.text
+    def skipSpaces(from: Int): Int = {
+      var i = from
+      while (i < t.length && Util.isHsSpace(t.charAt(i))) i += 1
+      i
     }
-    lettered || numbered
+    def dotAt(from: Int): Boolean = { val i = skipSpaces(from); i < t.length && t.charAt(i) == '.' }
+    val i = skipSpaces(0)
+    if (i == t.length) false
+    else {
+      val c = t.charAt(i)
+      if (c >= 'a' && c <= 'z') dotAt(i + 1)
+      else if (c.isDigit) {
+        var j = i
+        while (j < t.length && t.charAt(j).isDigit) j += 1
+        j - i <= 2 && dotAt(j)
+      } else false
+    }
   }
 
   private def hangWrappedContinuation(prev: Line, cur: Line): Boolean =

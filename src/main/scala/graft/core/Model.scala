@@ -109,6 +109,9 @@ final case class FontInfo(
 
   /** Horizontal width in glyph units (DocumentStructure.hs:962, 989). */
   def width(code: Int): Double =
+    if (code >= 0 && code < 256) byteWidths(code) else lookupWidth(code)
+
+  private def lookupWidth(code: Int): Double =
     if (isType0) cidWidths.getOrElse(code, defaultWidth)
     else {
       val idx = code - simpleFirstChar
@@ -116,10 +119,27 @@ final case class FontInfo(
       else defaultWidth
     }
 
+  // the widths of codes 0..255, the codes a 1-byte show advances by
+  private lazy val byteWidths = Array.tabulate(256)(lookupWidth)
+
   /** Vertical displacement w1 in glyph units (DocumentStructure.hs:967, 990). */
   def widthV(code: Int): Double =
     if (isType0) cidWidthsV.getOrElse(code, w1Default)
     else FontInfo.DefaultVerticalW1
+
+  // Interp.codeToUnicode for codes 0..255, each entry filled on first use
+  private lazy val byteUnicode = new Array[String](256)
+
+  /** `Interp.codeToUnicode(this, code)`; a code below 256 decodes once per
+    * font instance and then comes from a table. */
+  def unicode(code: Int): String =
+    if (code < 0 || code > 255) Interp.codeToUnicode(this, code)
+    else {
+      val table = byteUnicode
+      var s = table(code)
+      if (s == null) { s = Interp.codeToUnicode(this, code); table(code) = s }
+      s
+    }
 }
 object FontInfo {
   val DefaultVerticalW1: Double = -1000

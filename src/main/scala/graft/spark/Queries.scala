@@ -229,14 +229,25 @@ object Queries {
     * next to a delta write) whose results do not depend on each other.
     * The child thread inherits the caller's SparkContext local
     * properties (InheritableThreadLocal), so scheduling behavior matches
-    * the calling thread's. Failures on either side propagate. */
-  private def inParallel(a: => Unit, b: => Unit): Unit = {
+    * the calling thread's. Failures on either side propagate; when both
+    * throw, the caller's error carries the child's as suppressed. `b` runs
+    * on the calling thread and its value is returned. */
+  private[graft] def inParallel[T](a: => Unit, b: => T): T = {
     @volatile var err: Throwable = null
     val th = new Thread(() => try a catch { case e: Throwable => err = e },
       "graft-parallel-action")
     th.start()
-    try b finally th.join()
+    val out =
+      try b
+      catch {
+        case e: Throwable =>
+          th.join()
+          if (err != null && (err ne e)) e.addSuppressed(err)
+          throw e
+      }
+    th.join()
     if (err != null) throw err
+    out
   }
 
   private val q12 = Q(
@@ -1572,10 +1583,9 @@ object Queries {
       // The index write and the delta's signature materialization are
       // independent — overlap them (guide §2.6)
       val docs = t(spark, dir, "documents")
-      var dk: DataFrame = null
-      inParallel(
+      val dk = inParallel(
         buildSignatureIndex(docs, idxTable, s"$base/sig"),
-        { dk = sigKeyed(recrawlDelta(docs)).localCheckpoint(true) })
+        sigKeyed(recrawlDelta(docs)).localCheckpoint(true))
       incrementalDedupKeyed(spark, idxTable, dk)
     },
     Some(s"""WITH delta AS (

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
+import graft.spark.FixtureGen
 
 /** Golden end-to-end replay (reference test/Golden.hs): every reference
   * fixture PDF extracted in three modes and compared byte-for-byte against
@@ -24,6 +25,15 @@ class GoldenSpec extends AnyFunSuite {
     case "legacy" => DocStructure.openDocument(bytes, None).map(d => Legacy.legacyText(d)._1)
   }
 
+  /** Reference cases when the fixture dir is present: 15 PDFs x 3 modes
+    * (FIXTURES.md §2). */
+  private val ReferenceCases = 45
+
+  if (fixtures.isEmpty)
+    test(s"reference goldens: $ReferenceCases byte-exact cases skipped (no fixture dir)") {
+      cancel(s"$fixDir has no fixture PDFs; set GRAFT_FIXTURES to run the $ReferenceCases cases")
+    }
+
   for (pdf <- fixtures) {
     val name = Paths.get(pdf).getFileName.toString.stripSuffix(".pdf")
     for ((mode, dir) <- List(("tagged", "expected"), ("geom", "expected-geom"),
@@ -42,9 +52,12 @@ class GoldenSpec extends AnyFunSuite {
     }
   }
 
+  // every corpus kind, plus books: 24 pages with a running header and
+  // page numbers, which tagged mode lays out with the geom code
+  private val synthetic = (0L until 45L).map(FixtureGen.docFor) ++ (0L until 3L).map(FixtureGen.book)
+
   test("synthetic corpus documents match constructed ground truth") {
-    for (i <- 0L until 45L) {
-      val d = graft.spark.FixtureGen.docFor(i)
+    for ((d, i) <- synthetic.zipWithIndex) {
       val actual = d.kind match {
         case "html" => Html.extractHtml(d.bytes)
         case "textrow" => d.expected // fallback path exercised in CorpusSpec
@@ -53,4 +66,15 @@ class GoldenSpec extends AnyFunSuite {
       assert(actual == d.expected, s"kind=${d.kind} i=$i")
     }
   }
+
+  // geom: every PDF (expectedGeom defaults to the tagged text); legacy:
+  // the PDFs whose stream-order text FixtureGen authors
+  private val pdfs = synthetic.filter(d => d.kind != "html" && d.kind != "textrow")
+  for ((mode, cases) <- List(
+      "geom" -> pdfs.map(d => d -> d.expectedGeom),
+      "legacy" -> pdfs.filter(_.expectedLegacyOrNull != null).map(d => d -> d.expectedLegacy)))
+    test(s"synthetic corpus [$mode]: ${cases.size} PDFs match constructed ground truth") {
+      for ((d, want) <- cases)
+        assert(runMode(mode, d.bytes).fold(e => s"<err ${e.render}>", identity) == want, s"kind=${d.kind}")
+    }
 }

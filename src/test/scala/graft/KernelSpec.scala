@@ -70,6 +70,22 @@ class KernelSpec extends AnyFunSuite {
     assert(math.abs(gs(1).x - 8.0) < 1e-9) // 6 + 200/1000*10
   }
 
+  test("literal strings: plain runs, escapes, nested parens, octal and high bytes") {
+    def shown(lit: String): String =
+      Interp.interpretContentItems(stubDoc, DocStructure.emptyDict, Map("/F1" -> stubFont),
+        s"BT /F1 10 Tf 0 0 Td $lit Tj ET".getBytes("ISO-8859-1")).collect {
+        case PageItem.ItemGlyph(g) => g.text
+      }.mkString("|")
+    assert(shown("(AB)") == "AB")
+    assert(shown("()") == "")
+    assert(shown("(A\\)B)") == "A)B")
+    assert(shown("(A(B)C)") == "A(B)C")
+    assert(shown("(x\\101\\1023y)") == "xABy") // extra octal digits are dropped
+    assert(shown("(a\\qb)") == "a?b")
+    assert(shown("(caf\u00e9)") == "caf\u00e9")
+    assert(shown("(unterminated") == "")
+  }
+
   test("q/Q restores the graphics state") {
     val gs = interp("q 2 0 0 2 0 0 cm Q BT /F1 10 Tf 50 50 Td (A) Tj ET")
     assert(gs.head.x == 50.0 && gs.head.size == 10.0)
@@ -233,7 +249,6 @@ class KernelSpec extends AnyFunSuite {
   test("Identity-H Adobe-Japan1 without ToUnicode: variant + supplement CIDs extract") {
     // CIDs 1125 (亜), 390 (variant range 96-632: halfwidth grave), 500 (╋),
     // 7479 (supplement: box light horizontal) as 2-byte codes.
-    import java.nio.charset.StandardCharsets.ISO_8859_1
     val hex = "0465" + "0186" + "01F4" + "1D37"
     val stream = s"BT /F1 12 Tf 72 720 Td <$hex> Tj ET\n"
     val objects = Seq(
@@ -246,6 +261,14 @@ class KernelSpec extends AnyFunSuite {
         "/DescendantFonts [6 0 R] >>",
       "<< /Type /Font /Subtype /CIDFontType0 /BaseFont /TestMincho " +
         "/CIDSystemInfo << /Registry (Adobe) /Ordering (Japan1) /Supplement 6 >> /DW 1000 >>")
+    val doc = DocStructure.openDocument(classicPdf(objects), None).toOption.get
+    val text = Extract.taggedText(doc).toOption.get
+    assert(text == "亜｀╋─\n", text.map(_.toInt.toHexString).mkString(","))
+  }
+
+  /** Classic-xref PDF whose object i+1 is `objects(i)`; object 1 is the root. */
+  private def classicPdf(objects: Seq[String]): Array[Byte] = {
+    import java.nio.charset.StandardCharsets.ISO_8859_1
     val out = new scala.collection.mutable.ArrayBuffer[Byte]
     def bb(s: String): Array[Byte] = s.getBytes(ISO_8859_1)
     val offsets = new scala.collection.mutable.ArrayBuffer[Int]
@@ -258,9 +281,52 @@ class KernelSpec extends AnyFunSuite {
     out ++= bb(s"xref\n0 ${objects.length + 1}\n0000000000 65535 f \n")
     for (off <- offsets) out ++= bb(f"$off%010d 00000 n \n")
     out ++= bb(s"trailer\n<< /Size ${objects.length + 1} /Root 1 0 R >>\nstartxref\n$xrefAt\n%%EOF\n")
-    val doc = DocStructure.openDocument(out.toArray, None).toOption.get
-    val text = Extract.taggedText(doc).toOption.get
-    assert(text == "亜｀╋─\n", text.map(_.toInt.toHexString).mkString(","))
+    out.toArray
+  }
+
+  test("Tf resolves a name against the resources in force: a form's /F1 is not the page's") {
+    def stream(s: String) = s"<< /Length ${s.length} >>\nstream\n${s}endstream"
+    val page = "BT /F1 12 Tf 72 720 Td (A) Tj ET /Fm0 Do BT /F1 12 Tf 72 680 Td (A) Tj ET\n"
+    val form = "BT /F1 12 Tf 72 700 Td (A) Tj ET\n"
+    val doc = DocStructure.openDocument(classicPdf(Seq(
+      "<< /Type /Catalog /Pages 2 0 R >>",
+      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+      "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+        "/Resources << /Font << /F1 5 0 R >> /XObject << /Fm0 6 0 R >> >> /Contents 4 0 R >>",
+      stream(page),
+      "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica " +
+        "/Encoding << /Differences [65 /bullet] >> >>",
+      s"<< /Type /XObject /Subtype /Form /BBox [0 0 612 792] " +
+        s"/Resources << /Font << /F1 7 0 R >> >> /Length ${form.length} >>\nstream\n${form}endstream",
+      "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")), None).toOption.get
+    val texts = Interp.interpretPageItems(doc, 3).toOption.get.collect { case PageItem.ItemGlyph(g) => g.text }
+    assert(texts == List("•", "A", "•"))
+  }
+
+  test("1-byte decode table equals codeToUnicode for every FixtureGen font, /Differences and ToUnicode") {
+    import graft.spark.FixtureGen
+    val fixtureFonts = ((0L until FixtureGen.kinds.length.toLong).map(FixtureGen.docFor) :+ FixtureGen.book(0))
+      .flatMap(d => DocStructure.openDocument(d.bytes, None).toOption)
+      .flatMap { doc =>
+        doc.xref.keys.toSeq.sorted
+          .filter(r => doc.findDictByRef(r).flatMap(_.get("/Type")).contains(PName("/Font")))
+          .map(doc.fontInfoByRef)
+      }
+    assert(fixtureFonts.nonEmpty)
+    val diff = FontInfo.empty.copy(encoding = Encoding.DiffEncoding(TreeMap(
+      32 -> "/space", 65 -> "/A", 66 -> "/bullet", 67 -> "/uni263A", 68 -> "/uniZZ", 200 -> "/notaglyph")))
+    val toUnicode = FontInfo.empty.copy(
+      toUnicode = Map(65 -> "ｱ", 66 -> "fi", 255 -> "\uD83D\uDE00"))
+    val others = Seq(diff, toUnicode,
+      FontInfo.empty.copy(encoding = Encoding.WithCharSet("ZapfDingbats")),
+      FontInfo.empty.copy(bytesPerCode = 2),
+      FontInfo.empty.copy(encoding = Encoding.CIDmap("Adobe-Japan1"), bytesPerCode = 2, isType0 = true),
+      FontInfo.empty.copy(encoding = Encoding.SJISmap))
+    for (fi <- fixtureFonts ++ others) {
+      // fill the table in reverse, then read every entry back from it
+      for (c <- 255 to 0 by -1) fi.unicode(c)
+      for (c <- 0 to 255) assert(fi.unicode(c) == Interp.codeToUnicode(fi, c), s"$fi code $c")
+    }
   }
 
   // ---- ToUnicode CMap parsing (Cmap.hs behavior) ----

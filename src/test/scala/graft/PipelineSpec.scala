@@ -14,16 +14,19 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
 
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
+  private def newSession(): SparkSession = {
+    val s = SparkSession.builder()
       .master("local[4]")
       .appName("pipeline-spec")
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    s.sparkContext.setLogLevel("WARN")
+    s
   }
+
+  override def beforeAll(): Unit = spark = newSession()
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
@@ -99,6 +102,50 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(m("decode_failures") == 2L, m)
     assert(m("chars") == collected.map(_.chars.toLong).sum, m)
     assert(m("kernel_micros").asInstanceOf[Long] > 0L, m)
+  }
+
+  test("ExtractJob prints the observed totals of the rows it wrote") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("extractjob").toString
+    val bad = Seq(("https://bad.test/1", "%PDF-1.5 garbage".getBytes, null: String),
+      ("https://bad.test/2", Array.fill(64)(0x7f.toByte), null: String)).toDF("url", "html", "text")
+    CorpusGen.inputView(CorpusGen.corpus(spark, rows = 16, partitions = 2, heavy = true))
+      .select("url", "html", "text").unionByName(bad)
+      .write.parquet(s"$dir/in")
+    // one JSON summary line per run; ExtractJob.main stops the session it
+    // shares with this suite, and a missing observation must fail, not hang
+    def summary(): String = {
+      val printed = new java.io.ByteArrayOutputStream
+      val run = scala.concurrent.Future(Console.withOut(printed) {
+        ExtractJob.main(Array(s"$dir/in", s"$dir/out", "tagged"))
+      })(scala.concurrent.ExecutionContext.global)
+      try scala.concurrent.Await.result(run, scala.concurrent.duration.Duration(5, "min"))
+      finally spark = newSession()
+      val lines = printed.toString.linesIterator.filter(_.startsWith("{\"job\"")).toList
+      assert(lines.length == 1, printed.toString)
+      lines.head
+    }
+    val first = summary()
+    val written = spark.read.parquet(s"$dir/out/extracted")
+    val docs = written.count()
+    val ok = written.filter(col("ok")).count()
+    assert(docs == 18 && ok == 16)
+    assert(first == s"""{"job":"extract","mode":"tagged","docs":$docs,"ok":$ok,"errors":${docs - ok}}""")
+    // a rerun resumes with nothing left to do and still reports its totals
+    assert(summary() == """{"job":"extract","mode":"tagged","docs":0,"ok":0,"errors":0}""")
+  }
+
+  test("inParallel returns the caller arm's value and keeps both arms' errors") {
+    import graft.spark.Queries.inParallel
+    @volatile var ran = false
+    assert(inParallel({ ran = true }, 42) == 42 && ran)
+    val child = new IllegalStateException("child")
+    val caller = intercept[IllegalArgumentException] {
+      inParallel(throw child, throw new IllegalArgumentException("caller"))
+    }
+    assert(caller.getSuppressed.toList == List(child))
+    assert(intercept[IllegalStateException](inParallel(throw child, 1)) eq child)
   }
 
   test("malformed payloads become error rows, not task failures") {

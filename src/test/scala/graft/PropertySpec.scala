@@ -103,6 +103,104 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  /** The header/footer strip as written before it skipped Middle-band
+    * lines: every line's text normalized eagerly, flags zipped back. The
+    * reference `stripHeadersFooters` must agree with it on every page. */
+  private def eagerStrip(pageCount: Int, pagesLines: List[List[Line]]): List[List[Line]] = {
+    val threshold = math.max(3, math.min(math.ceil(0.2 * pageCount).toInt, 5))
+    def band(extent: (Double, Double), l: Line): Int = {
+      val (lo, hi) = extent
+      val span = hi - lo
+      if (span <= 0) 0
+      else if (l.baseline >= hi - 0.15 * span) 1
+      else if (l.baseline <= lo + 0.15 * span) -1
+      else 0
+    }
+    val infos = pagesLines.filter(_.nonEmpty).map(ls => (ls, Layout.pageBaselineExtent(ls)))
+    def repeated(b: Int): Set[String] =
+      if (pageCount < 3) Set.empty
+      else infos.flatMap { case (ls, e) => ls.filter(band(e, _) == b).map(l => Layout.headerFooterCore(l.text)) }
+        .groupBy(identity).collect { case (core, hits) if hits.length >= threshold => core }.toSet
+    val (repTop, repBottom) = (repeated(1), repeated(-1))
+    pagesLines.map { ls =>
+      if (ls.isEmpty) ls
+      else {
+        val extent = Layout.pageBaselineExtent(ls)
+        val flags = ls.map { l =>
+          val b = band(extent, l)
+          val norm = Layout.normalizeHeaderFooterText(l.text)
+          if (b == 0) false
+          else if (Layout.isBarePageNumber(norm)) pageCount >= 2
+          else (if (b == 1) repTop else repBottom).contains(norm.filter(_ != '#'))
+        }
+        if (ls.length <= 2) {
+          if (flags.contains(true)) ls.zip(flags).collect { case (l, false) => l } else ls
+        } else ls.zip(flags).collect { case (l, false) => l }
+      }
+    }
+  }
+
+  test("header/footer strip equals the eager formula on generated pages") {
+    val text = Gen.frequency(
+      3 -> Gen.oneOf("Running Header", "Chapter 3", "Corpus Book", "Page  7", "page xiv"),
+      3 -> Gen.oneOf("12", "xiv", "3-4", "ii", "7/9", "iv.", "MMXXIV", "1 2"),
+      1 -> Gen.oneOf("", " ", "#", "viiiiiii"),
+      2 -> Gen.alphaNumStr.map(_.take(12)))
+    val baseline = Gen.frequency(
+      2 -> Gen.oneOf(770.0, 768.0), 2 -> Gen.oneOf(30.0, 24.0),
+      3 -> Gen.choose(100.0, 700.0), 1 -> Gen.const(400.0))
+    val line = for (bl <- baseline; x <- Gen.choose(50.0, 300.0); t <- text)
+      yield Line(bl, x, x + 80, 10, x, 0, t, Nil, lastSuper = false)
+    def at(bl: Double, t: String) = Line(bl, 72, 152, 10, 72, 0, t, Nil, lastSuper = false)
+    // a book page: a running header, body lines, a page number at the foot
+    val bookPage = for {
+      head <- Gen.oneOf("Running Header", "Corpus Book")
+      body <- Gen.choose(1, 5).flatMap(Gen.listOfN(_, Gen.choose(100.0, 700.0)))
+      num <- Gen.oneOf(Gen.choose(1, 40).map(_.toString), Gen.oneOf("xiv", "ii", "page 9"))
+    } yield at(770, head) :: body.map(at(_, "body text")) ::: List(at(24, num))
+    val page = Gen.frequency(1 -> Gen.const(Nil), 3 -> Gen.choose(1, 2).flatMap(Gen.listOfN(_, line)),
+      4 -> Gen.choose(3, 8).flatMap(Gen.listOfN(_, line)), 4 -> bookPage)
+    val doc = for {
+      n <- Gen.choose(0, 7)
+      pages <- Gen.listOfN(n, page)
+      count <- Gen.frequency(4 -> Gen.const(n), 1 -> Gen.choose(0, 7))
+    } yield (count, pages)
+    forAll(doc) { case (count, pages) =>
+      assert(Layout.stripHeadersFooters(count, pages) == eagerStrip(count, pages), s"count=$count pages=$pages")
+    }
+    // the generator reaches the removal branches, not just the keep path
+    val removed = (0 until Runs).count { i =>
+      doc.apply(Gen.Parameters.default, Seed(i.toLong))
+        .exists { case (c, ps) => Layout.stripHeadersFooters(c, ps) != ps }
+    }
+    assert(removed > Runs / 10, s"only $removed of $Runs generated docs lost a line")
+  }
+
+  test("layout scans equal the list formulas they replace") {
+    val d = Gen.frequency(6 -> Gen.choose(-50.0, 800.0),
+      1 -> Gen.oneOf(Double.NaN, 0.0, -0.0, Double.PositiveInfinity, Double.NegativeInfinity))
+    val glyph = for (x <- d; y <- d; w <- d)
+      yield Glyph("a", x, y, w, 10, "/F1", 0, None)
+    def bits(p: (Double, Double)) =
+      (java.lang.Double.doubleToRawLongBits(p._1), java.lang.Double.doubleToRawLongBits(p._2))
+    forAll(Gen.nonEmptyListOf(glyph)) { gs =>
+      val xs = gs.flatMap(g => List(g.x, g.x + g.width))
+      val ys = gs.map(_.y)
+      assert(bits(Layout.pageExtents(gs)) == bits((math.max(1, xs.max - xs.min), math.max(1, ys.max - ys.min))))
+      val ls = gs.map(g => Line(g.y, g.x, g.x, 10, g.x, 0, "", Nil, lastSuper = false))
+      assert(bits(Layout.pageBaselineExtent(ls)) == bits((ys.min, ys.max)))
+    }
+    val marker = Gen.listOf(Gen.oneOf(" ", "\u3000", "a", "z", "B", "1", "42", "123", "\u0663", ".", "x")).map(_.mkString)
+    forAll(marker) { t =>
+      val s = Util.stripStart(t)
+      val lettered = s.headOption.exists(c => c >= 'a' && c <= 'z') &&
+        Util.stripStart(s.drop(1)).headOption.contains('.')
+      val ds = s.takeWhile(_.isDigit)
+      val numbered = ds.nonEmpty && ds.length <= 2 && Util.stripStart(s.drop(ds.length)).headOption.contains('.')
+      assert(Layout.listMarkerStart(Line(0, 0, 0, 10, 0, 0, t, Nil, lastSuper = false)) == (lettered || numbered), t)
+    }
+  }
+
   test("diff of identical paragraph lists is empty; deletions count bounded") {
     forAll(Gen.listOf(Gen.alphaStr)) { ps =>
       assert(Diff.diffParagraphs(ps, ps).isEmpty)
