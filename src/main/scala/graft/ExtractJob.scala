@@ -50,7 +50,7 @@ object ExtractJob {
 
     // the totals ride the `extracted` write: observed above the cache, so
     // the later reads of the cached rows run no further counting job
-    val (observed, totals) = Pipeline.observeExtraction(Pipeline.extractMode(spark, remaining, mode))
+    val (observed, totals) = Pipeline.observeExtraction(Pipeline.extract(spark, remaining, mode))
     val extracted = observed.cache()
 
     extracted.write.mode(SaveMode.Append).parquet(extractedPath)

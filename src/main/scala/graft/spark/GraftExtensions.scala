@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: extract_text(binary[, mode]) -> string,
   * mode in {tagged, geom, legacy} (default tagged) matching
-  * Pipeline.extractMode's three extractors.
+  * Pipeline.extract's three extractors.
   *
   * The mapPartitions pipeline stays the production path (it keeps the
   * per-partition memoization and metrics hooks); this expression is the SQL

@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 
@@ -51,17 +51,11 @@ object Pipeline {
     * larger rows are counted as errors instead of risking executor OOM. */
   val MaxPayloadBytes: Int = 512 << 20
 
-  /** The per-row kernel: format dispatch on the same codepath. */
-  def extractRow(url: String, html: Array[Byte], textCol: String, geom: Boolean): ExtractedDoc =
-    extractRowMode(url, html, textCol, if (geom) "geom" else "tagged")
-
-  /** Mode: tagged (default, structure tree with geometry fallback), geom
-    * (pure glyph layout), legacy (stream-order extractor). */
-  def extractRowMode(url: String, html: Array[Byte], textCol: String, mode: String): ExtractedDoc =
-    extractRowMode(url, html, textCol, mode, MaxPayloadBytes)
-
+  /** The per-row kernel: format dispatch on the same codepath. Mode:
+    * tagged (default, structure tree with geometry fallback), geom (pure
+    * glyph layout), legacy (stream-order extractor). */
   def extractRowMode(url: String, html: Array[Byte], textCol: String, mode: String,
-      maxPayloadBytes: Int): ExtractedDoc = {
+      maxPayloadBytes: Int = MaxPayloadBytes): ExtractedDoc = {
     val t0 = System.nanoTime()
     def done(mode: String, ok: Boolean, err: String, text: String, pages: Int): ExtractedDoc =
       ExtractedDoc(url, text, mode, ok, err, pages, if (text == null) 0 else text.length,
@@ -100,29 +94,19 @@ object Pipeline {
     }
   }
 
-  /** Full extraction over an input dataframe with the input_hint schema.
+  /** Full extraction over an input dataframe with the input_hint schema,
+    * in one of extractRowMode's modes.
     *
     * Scale notes: only (url, html, text) are selected -> Catalyst prunes the
     * scan to those columns; `mapPartitions` keeps JVM object reuse and the
     * per-document caches partition-local; no shuffle is introduced at all —
     * extraction is embarrassingly parallel and writes can stay
     * shuffle-free. Skew from giant PDFs is bounded by MaxPayloadBytes and
-    * surfaced via kernelMicros in the metrics. Optional `saltPartitions`
-    * redistributes rows by url hash (deterministic) when the source file
-    * layout is skewed (e.g. crawl segments of wildly different row counts).
+    * surfaced via kernelMicros in the metrics.
     */
-  def extract(spark: SparkSession, input: DataFrame,
-      geom: Boolean = false, saltPartitions: Int = 0): Dataset[ExtractedDoc] =
-    extractMode(spark, input, if (geom) "geom" else "tagged", saltPartitions)
-
-  def extractMode(spark: SparkSession, input: DataFrame,
-      mode: String, saltPartitions: Int = 0): Dataset[ExtractedDoc] = {
+  def extract(spark: SparkSession, input: DataFrame, mode: String = "tagged"): Dataset[ExtractedDoc] = {
     import spark.implicits._
-    val pruned = input.select(col("url"), col("html"), col("text"))
-    val redistributed =
-      if (saltPartitions > 0) pruned.repartition(saltPartitions, pmod(xxhash64(col("url")), lit(saltPartitions)))
-      else pruned
-    redistributed
+    input.select(col("url"), col("html"), col("text"))
       .as[(String, Array[Byte], String)]
       .mapPartitions { iter =>
         iter.map { case (url, html, text) => extractRowMode(url, html, text, mode) }
@@ -186,163 +170,6 @@ object Pipeline {
       .repartitionByRange(giantSlots, col("giant_slot"))
       .drop("giant_slot")
     smalls.unionByName(giants)
-  }
-
-  /** Intra-document parallelism for GIANT PDFs: a 100k-page document is a
-    * single task under row-level parallelism — the one skew unit that
-    * placement (sizeWeightedRepartition) cannot shrink. Geometry-mode
-    * layout composes per page (geomText = per-page pageLinesRaw -> one
-    * document assembly), so giants split into page-RANGE chunks that
-    * extract in parallel tasks and reassemble byte-identically:
-    *
-    *   1. a skinny planning pass opens each PDF just far enough to count
-    *      pages (xref + page tree — no content streams);
-    *   2. giants (pages > giantThresholdPages) explode into chunk rows and
-    *      re-join the payload (the byte duplication per chunk is the price
-    *      of intra-doc parallelism — chunks re-open the doc and interpret
-    *      only their page range). Every re-open re-parses the xref + page
-    *      tree, a cost that grows WITH the document, so the chunk COUNT is
-    *      capped at maxChunksPerDoc (one per task slot, not one per 64
-    *      pages): measured here, a fixed small chunk size made a 40k-page
-    *      giant 17x SLOWER (625 re-opens), while capped chunking amortizes
-    *      the open against pages/maxChunks pages of kernel work;
-    *   3. serialized per-page PageLines shuffle by url and one assembly
-    *      task per giant runs the cross-page layout (header/footer strip,
-    *      paragraph merge) over the ordered concatenation — the exact
-    *      computation geomText runs, hence byte-identical output;
-    *   4. non-giants take the ordinary row-parallel geom path.
-    *
-    * On a real corpus you would read `pages` from table metadata and skip
-    * the planning pass entirely.
-    *
-    * WHEN TO USE — measured honestly (ChunkProbe, 201 docs, one giant,
-    * local[16]): for THIS kernel (~0.15 ms/page) the chunked path is a
-    * PESSIMIZATION at every size tried — 2.5s vs 0.9s wall at 4,000 pages
-    * and 16.4s vs 7.1s at 40,000 — because re-parsing the xref/page tree
-    * per chunk plus shipping serialized PageLines outweighs the page work
-    * it parallelizes. It pays off when per-page cost dwarfs both (an
-    * OCR/vision stage at ~100 ms/page: 1,250 pages of kernel per chunk vs
-    * a 0.5 s re-open). The default pipeline answer to giant-PDF skew
-    * remains row-level parallelism + scan-split/size-weighted placement
-    * (BENCH/BASELINE.md); this operator exists for the expensive-kernel
-    * regime and is pinned byte-identical so swapping it in is safe. */
-  /** One page-range chunk of a giant PDF -> serialized PageLines list. */
-  private def doChunk(html: Array[Byte], from: Int, until: Int): Either[String, Array[Byte]] =
-    DocStructure.openDocument(html, None) match {
-      case Left(e) => Left(e.render)
-      case Right(doc) => DocStructure.pageRefs(doc) match {
-        case Left(e) => Left(e.render)
-        case Right(refs) =>
-          val layouts = new scala.collection.mutable.ListBuffer[Layout.PageLines]
-          var err: String = null
-          for (ref <- refs.slice(from, until) if err == null)
-            Interp.interpretPageItems(doc, ref) match {
-              case Right(items) => layouts += Layout.pageLinesRaw(items)
-              case Left(e) => err = e.render
-            }
-          if (err != null) Left(err)
-          else {
-            val baos = new java.io.ByteArrayOutputStream()
-            val oos = new java.io.ObjectOutputStream(baos)
-            oos.writeObject(layouts.toList)
-            oos.close()
-            Right(baos.toByteArray)
-          }
-      }
-    }
-
-  def extractGeomChunked(spark: SparkSession, input: DataFrame,
-      maxChunksPerDoc: Int = 32, giantThresholdPages: Int = 256): Dataset[ExtractedDoc] = {
-    import spark.implicits._
-    require(maxChunksPerDoc > 0)
-    val pruned = input.select(col("url"), col("html"), col("text"))
-    // 1. skinny plan: page count per PDF row (no content interpretation)
-    val planned = pruned.select(col("url"), col("html"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (url, html) =>
-        val payload = if (html == null) Array.emptyByteArray else html
-        val pages =
-          // over-cap payloads are NOT giants: they fall through to the
-          // ordinary path, which emits the same "payload too large" error
-          // row as extractRowMode — the decode-bomb cap and the
-          // byte-identical contract both hold on the chunked path
-          if (payload.length > MaxPayloadBytes || !Html.looksLikePdf(payload)) -1
-          else
-            try DocStructure.openDocument(payload, None) match {
-              case Right(doc) => DocStructure.pageRefs(doc).map(_.length).getOrElse(0)
-              case Left(_) => -1
-            } catch { case _: Throwable => -1 } // total: plan failures take the row path
-        (url, pages)
-      }).toDF("url", "pages")
-    // the skinny planning output feeds both the chunk build and the
-    // left-anti "rest" join — materialize it or the full-corpus planning
-    // parse runs once per consumer. localCheckpoint, NOT cache: cache()
-    // registers in the session's CacheManager and is never released unless
-    // explicitly unpersisted (repeat invocations in a long-lived session
-    // would accumulate storage), while checkpoint blocks are dropped by the
-    // ContextCleaner as soon as the returned Dataset is unreferenced.
-    // (Cluster caveat: localCheckpoint forfeits lineage recovery — under
-    // dynamic allocation / preemption a lost executor fails the job. The
-    // giant-plan table is tiny; a cluster run would read page counts from
-    // table metadata instead, as noted above.)
-    val giantUrls = planned.filter(col("pages") > giantThresholdPages)
-      // per-doc chunk size: pages/maxChunks, floored at half the giant
-      // threshold so a barely-giant doc still amortizes its re-opens
-      .withColumn("cp", greatest(ceil(col("pages") / lit(maxChunksPerDoc)),
-        lit(math.max(giantThresholdPages / 2, 1))).cast("int"))
-      .localCheckpoint(true)
-    // 2. chunk rows (url, from, until) joined back to the payload
-    val chunks = giantUrls
-      .select(col("url"), explode(sequence(lit(0),
-        floor((col("pages") - 1) / col("cp")).cast("int"))).as("chunk"),
-        col("pages"), col("cp"))
-      .join(pruned.select(col("url"), col("html")), Seq("url"))
-      .select(col("url"), col("chunk"), col("pages"), col("cp"), col("html"))
-    // 3. per-chunk PageLines, then one assembly per giant
-    val chunkRows = chunks
-      .as[(String, Int, Int, Int, Array[Byte])]
-      .mapPartitions(_.map { case (url, chunk, pages, chunkPages, html) =>
-        val from = chunk * chunkPages
-        val until = math.min(pages, from + chunkPages)
-        val blobOrErr: Either[String, Array[Byte]] =
-          try doChunk(html, from, until)
-          catch { case t: Throwable => // totality: one bad payload = one error row
-            Left(s"chunk extraction failed: ${t.getClass.getSimpleName}")
-          }
-        (url, chunk, pages, blobOrErr.toOption.orNull, blobOrErr.left.toOption.orNull)
-      })
-      .toDF("url", "chunk", "pages", "blob", "err")
-    val giantDocs = chunkRows
-      .groupByKey(r => r.getString(0))(Encoders.STRING)
-      .mapGroups { (url, rows) =>
-        val t0 = System.nanoTime()
-        try {
-          val sorted = rows.toArray.sortBy(_.getInt(1))
-          val pages = sorted.head.getInt(2)
-          val firstErr = sorted.find(_.getString(4) != null).map(_.getString(4))
-          firstErr match {
-            case Some(e) => ExtractedDoc(url, null, "error", ok = false, e, pages, 0,
-              (System.nanoTime() - t0) / 1000)
-            case None =>
-              val layouts = sorted.toList.flatMap { r =>
-                val ois = new java.io.ObjectInputStream(
-                  new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](3)))
-                try ois.readObject().asInstanceOf[List[Layout.PageLines]]
-                finally ois.close()
-              }
-              val text = Layout.layoutDocumentFromPageLines(Layout.defaultOptions, layouts)
-              ExtractedDoc(url, text, "pdf-geom", ok = true, "", pages, text.length,
-                (System.nanoTime() - t0) / 1000)
-          }
-        } catch { case t: Throwable => // totality: assembly failures become error rows
-          ExtractedDoc(url, null, "error", ok = false,
-            s"chunk assembly failed: ${t.getClass.getSimpleName}", 0, 0,
-            (System.nanoTime() - t0) / 1000)
-        }
-      }
-    // 4. everything that is not a chunked giant takes the ordinary path
-    val rest = pruned.join(broadcast(giantUrls.select("url")), Seq("url"), "left_anti")
-    extractMode(spark, rest, "geom").unionByName(giantDocs)
   }
 
   /** Attach decode counters (docs, ok, decode failures, chars, kernel
@@ -1070,7 +897,7 @@ object Surfaces {
     val stream = spark.readStream.schema(schema).parquet(corpusDir)
     val extracted = stream.select(col("url"), col("html"), col("text"))
       .as[(String, Array[Byte], String)]
-      .map { case (url, html, text) => Pipeline.extractRow(url, html, text, geom = false) }
+      .map { case (url, html, text) => Pipeline.extractRowMode(url, html, text, "tagged") }
     val q = extracted.writeStream
       .format("memory")
       .queryName(queryName)
@@ -1105,13 +932,12 @@ object Streaming {
     * PARTITION regardless of data volume, so partitions must be sized to
     * STATE VOLUME, not inherited from the batch session (x22 measured
     * 8s -> ~3s going 32 -> 8 in round 5; round 7 applies the same sizing
-    * to every stream). Parameterized via SPARK_GRAFT_STREAM_SHUFFLE —
-    * never hard-coded to the local core count; a cluster sets it to
-    * state rows / target-rows-per-store. Partition count does not change
-    * any result: aggregations/sessionization are keyed, and every
-    * streaming query ends in a deterministic total-order sort. */
-  private[graft] def streamShufflePartitions: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE").map(_.toInt).getOrElse(8)
+    * to every stream). Sized to the suite's state volume, not to the
+    * local core count; a cluster would size it as state rows /
+    * target-rows-per-store. Partition count does not change any result:
+    * aggregations/sessionization are keyed, and every streaming query
+    * ends in a deterministic total-order sort. */
+  private[graft] val streamShufflePartitions: Int = 8
 
   /** Every stream runs on an ISOLATED child session (newSession shares
     * the SparkContext but owns its SQLConf + temp-view catalog): the
@@ -1298,7 +1124,7 @@ object Streaming {
       .filter(col("is0") || col("b0a") =!= col("b0b"))
       // round 7: compiled sorted-merge intersect (Queries.interSizeUdf) —
       // the per-candidate interpreted ArrayIntersect was this stream's
-      // dominant cost (addBatch 3030ms of 4413ms, R07Probe)
+      // dominant cost (addBatch 3030ms of 4413ms, OPTIMIZATION_r07.md)
       .filter(Queries.interSizeUdf(col("hs_a"), col("hs_b")) * 3 >=
         size(col("hs_a")) + size(col("hs_b")))
       .groupBy(col("doc_b"))

@@ -277,8 +277,9 @@ object Queries {
       // partitioning, so every writer task holds exactly one bucket) —
       // the sort+parquet-encode runs on 8 cores instead of the 1-2 scan
       // splits, and each bucket lands in ONE file, so the SMJ's scans
-      // read pre-sorted buckets (R07Probe: the li write was 1.1s of
-      // q12's 1.8s; guide §6 output sizing / §2 parallelize the write)
+      // read pre-sorted buckets (OPTIMIZATION_r07.md: the li write was
+      // 1.1s of q12's 1.8s; guide §6 output sizing / §2 parallelize the
+      // write)
       // the two table writes are independent — overlap them (guide §2.6)
       inParallel(
         t(spark, dir, "lineitem")
@@ -623,7 +624,8 @@ object Queries {
     * The corpus is dup-heavy by construction (band0 at sf0.1: 57 buckets
     * for 5000 docs, max bucket 3137), so the band join yields millions of
     * candidate pairs and the per-pair intersect dominated d6/d11/x31
-    * (x31's one micro-batch: addBatch 3030ms of 4413ms total, R07Probe).
+    * (x31's one micro-batch: addBatch 3030ms of 4413ms total,
+    * OPTIMIZATION_r07.md).
     * Merge-count of sorted sets == intersection cardinality — same value,
     * pinned against array_intersect in KernelParitySpec. */
   private[graft] val interSizeUdf = udf((a: Array[Long], b: Array[Long]) =>
@@ -1305,50 +1307,38 @@ object Queries {
       // corpus).
       var changed = 1L
       var iter = 0
-      def dbg(m: => String): Unit =
-        if (sys.env.contains("GRAFT_D10_DEBUG"))
-          System.err.println(s"[d10] $m t=${System.nanoTime() / 1000000}")
-      dbg("start")
-      locally {
-        dbg(s"sig=${sig.count()}")
-        dbg(s"withReps=${withReps.count()}")
-        dbg(s"edges=${edges.count()}")
-        dbg(s"labels=${labels.count()}")
-        while (changed > 0 && iter < 15) {
-          val nbr = edges.join(labels, edges("dst") === labels("v"))
-            .groupBy(edges("src")).agg(min(labels("lbl")).as("nlbl"))
-          // lbl0 = the ROUND-INPUT label: convergence must be measured
-          // against it, not against the hop output — a round where the hop
-          // progresses but halving adds nothing would otherwise read as
-          // "no change" and exit with non-converged labels, silently
-          // (the require below would pass)
-          val hop = labels.join(nbr, labels("v") === nbr("src"), "left")
-            .select(labels("v").as("v"), labels("lbl").as("lbl0"),
-              least(labels("lbl"), coalesce(col("nlbl"), labels("lbl"))).as("lbl"))
-          // path halving: adopt the label of one's current label
-          val l2 = hop.select(col("v").as("v2"), col("lbl").as("lbl2"))
-          // localCheckpoint TRUNCATES the logical lineage (cache alone does
-          // not — cached plans substitute only at physical planning, so the
-          // halving self-join doubled the ANALYZED plan tree per round and
-          // analysis time grew exponentially: measured 2.7s -> 11.5s per
-          // round on a 102-vertex graph). Round 7: ONE eager checkpoint per
-          // round (was cache -> count -> second materialization into the
-          // checkpoint); the convergence count then reads the materialized
-          // rows for near-free — halves the per-round job count.
-          val next = hop.join(l2, hop("lbl") === l2("v2"), "left")
-            .select(hop("v"), hop("lbl0"),
-              least(hop("lbl"), coalesce(col("lbl2"), hop("lbl"))).as("nl"))
-            .localCheckpoint(true)
-          changed = next.filter(col("nl") < col("lbl0")).count()
-          val newLabels = next.select(col("v"), col("nl").as("lbl"))
-          labels.unpersist(false)
-          labels = newLabels
-          iter += 1
-          dbg(s"iter=$iter changed=$changed")
-        }
+      while (changed > 0 && iter < 15) {
+        val nbr = edges.join(labels, edges("dst") === labels("v"))
+          .groupBy(edges("src")).agg(min(labels("lbl")).as("nlbl"))
+        // lbl0 = the ROUND-INPUT label: convergence must be measured
+        // against it, not against the hop output — a round where the hop
+        // progresses but halving adds nothing would otherwise read as
+        // "no change" and exit with non-converged labels, silently
+        // (the require below would pass)
+        val hop = labels.join(nbr, labels("v") === nbr("src"), "left")
+          .select(labels("v").as("v"), labels("lbl").as("lbl0"),
+            least(labels("lbl"), coalesce(col("nlbl"), labels("lbl"))).as("lbl"))
+        // path halving: adopt the label of one's current label
+        val l2 = hop.select(col("v").as("v2"), col("lbl").as("lbl2"))
+        // localCheckpoint TRUNCATES the logical lineage (cache alone does
+        // not — cached plans substitute only at physical planning, so the
+        // halving self-join doubled the ANALYZED plan tree per round and
+        // analysis time grew exponentially: measured 2.7s -> 11.5s per
+        // round on a 102-vertex graph). Round 7: ONE eager checkpoint per
+        // round (was cache -> count -> second materialization into the
+        // checkpoint); the convergence count then reads the materialized
+        // rows for near-free — halves the per-round job count.
+        val next = hop.join(l2, hop("lbl") === l2("v2"), "left")
+          .select(hop("v"), hop("lbl0"),
+            least(hop("lbl"), coalesce(col("lbl2"), hop("lbl"))).as("nl"))
+          .localCheckpoint(true)
+        changed = next.filter(col("nl") < col("lbl0")).count()
+        val newLabels = next.select(col("v"), col("nl").as("lbl"))
+        labels.unpersist(false)
+        labels = newLabels
+        iter += 1
       }
       require(changed == 0, s"label propagation did not converge in $iter iterations")
-      dbg("loop done")
       // materialize the (small) assignment, then drop every intermediate
       // cache — a long-lived session would otherwise accumulate the
       // signature/edge partitions in executor storage memory across
@@ -2780,7 +2770,7 @@ object Queries {
   private val x7 = Q(
     (spark, _) => {
       val c = corpus(spark)
-      Pipeline.extractMode(spark, CorpusGen.inputView(c), "geom")
+      Pipeline.extract(spark, CorpusGen.inputView(c), "geom")
         .toDF().select("url", "mode", "ok", "chars", "text").orderBy("url")
     },
     Some(s"""SELECT url,
@@ -2791,7 +2781,7 @@ object Queries {
   private val x8 = Q(
     (spark, _) => {
       val c = corpus(spark)
-      Pipeline.extractMode(spark, CorpusGen.inputView(c), "legacy")
+      Pipeline.extract(spark, CorpusGen.inputView(c), "legacy")
         .toDF().select("url", "mode", "ok", "chars", "text").orderBy("url")
     },
     // legacy-mode stream-order expectations (generator-encoded, pinned
@@ -3320,7 +3310,7 @@ object Queries {
     (spark, _) => {
       // the 2-arg extract_text(html, mode) form: mode selects the
       // stream-order legacy extractor through the SAME codegen'd
-      // expression — the SQL route now matches Pipeline.extractMode's
+      // expression — the SQL route now matches Pipeline.extract's
       // surface (x8 proves the mapPartitions route; this proves SQL)
       GraftExtensions.install(spark)
       CorpusGen.inputView(corpus(spark)).createOrReplaceTempView("crawl_x27")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.spark.Queries
 
 /** Dumps `.explain("formatted")` for the named queries (or all) to
@@ -17,16 +16,7 @@ object PlanDump {
     val names = args.lift(3).map(_.split(",").toSeq)
       .getOrElse(Queries.queries.keys.toSeq.sorted)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Bench.buildSession(cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- names) {
       spark.sparkContext.setJobDescription(s"plandump: $name")

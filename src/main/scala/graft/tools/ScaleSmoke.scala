@@ -23,7 +23,7 @@ object ScaleSmoke {
       case _ => "expected"
     }
     t0 = System.nanoTime()
-    val agg = Pipeline.extractMode(spark, stored, mode).toDF()
+    val agg = Pipeline.extract(spark, stored, mode).toDF()
       .join(stored.select(col("url"), col(expectedCol).as("expected")), Seq("url"))
       .agg(count(lit(1)).as("n"),
         sum(when(col("text") === col("expected"), 1L).otherwise(0L)).as("m"),

@@ -35,6 +35,14 @@ class FuzzSpec extends AnyFunSuite {
     }
   }
 
+  /** Every extractor must return, not throw. */
+  private def runAllExtractors(m: Array[Byte]): Unit = {
+    Extract.extractPdf(m, None)
+    Extract.extractPdfGeom(m, None)
+    DocStructure.openDocument(m, None).foreach(doc => Legacy.legacyText(doc))
+    Html.extractHtml(m)
+  }
+
   test("mutated PDFs never throw (tagged/geom/legacy modes)") {
     val rnd = new scala.util.Random(20260816L)
     var runs = 0
@@ -42,11 +50,7 @@ class FuzzSpec extends AnyFunSuite {
       val d = FixtureGen.docFor(i)
       val m = mutate(d.bytes, rnd)
       runs += 1
-      // must return, not throw
-      Extract.extractPdf(m, None)
-      Extract.extractPdfGeom(m, None)
-      DocStructure.openDocument(m, None).foreach(doc => Legacy.legacyText(doc))
-      Html.extractHtml(m)
+      runAllExtractors(m)
     }
     assert(runs == 144)
   }
@@ -58,6 +62,20 @@ class FuzzSpec extends AnyFunSuite {
       val m = mutate(d.bytes, rnd)
       Extract.extractPdf(m, None)
     }
+    succeed
+  }
+
+  test("degenerate payloads never throw (empty, plain text, html, noise, truncated)") {
+    val rnd = new scala.util.Random(42L)
+    val rc4 = FixtureGen.encryptedRc4(0L).bytes
+    val inputs = Seq(
+      Array.emptyByteArray,
+      "this is not a pdf at all, just words".getBytes("UTF-8"),
+      "<html><body><p>hello</p></body></html>".getBytes("UTF-8"),
+      Array.fill(10000)(rnd.nextInt(256).toByte),
+      "%PDF-1.5\n".getBytes("UTF-8") ++ Array.fill(5000)(rnd.nextInt(256).toByte),
+      rc4.take(rc4.length / 2))
+    inputs.foreach(runAllExtractors)
     succeed
   }
 }
